@@ -49,8 +49,20 @@ class SnapshotLedger:
     def _read(self) -> dict:
         if not os.path.exists(self.manifest_path):
             return {"committed": [], "commits": []}
-        with open(self.manifest_path) as f:
-            return json.load(f)
+        # a truncated/corrupt manifest must name itself, not surface as a
+        # bare JSONDecodeError — and nothing may run on top of it
+        try:
+            with open(self.manifest_path) as f:
+                state = json.load(f)
+            if not isinstance(state, dict) or not all(
+                isinstance(state.get(k), list) for k in ("committed", "commits")
+            ):
+                raise ValueError("expected {'committed': [...], 'commits': [...]}")
+        except ValueError as exc:  # JSONDecodeError, UnicodeDecodeError too
+            raise ValueError(
+                f"corrupt snapshot ledger {self.manifest_path}: {exc}"
+            ) from exc
+        return state
 
     def committed(self) -> set[int]:
         return set(self._read()["committed"])
@@ -78,6 +90,10 @@ class SnapshotLedger:
         tmp = self.manifest_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(state, f)
+            # durable before the rename publishes it: a crash must leave the
+            # old manifest or the new one, never an empty file
+            f.flush()
+            os.fsync(f.fileno())
         os.replace(tmp, self.manifest_path)
 
 

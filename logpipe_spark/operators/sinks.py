@@ -14,7 +14,7 @@ Reference semantics being re-expressed:
   date partitioning is a one-liner for callers that want it.
 - offset/line bookkeeping (`logpipe-input-file.c:1901-1925`) → the lineage
   table (LINEAGE_DDL): whole-snapshot conservation counters collected by an
-  observe() listener ON the write action itself (see pipeline.run_pipeline)
+  observe() listener ON the write action itself (see pipeline.process_snapshot)
   — zero extra passes, partition_id = -1 sentinel.
 
 Scale notes: ``fan_out_write`` is ONE job: scan → (optional salted
@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 #                        extra passes over the source);
 #   partition_id >= 0  → one row per written file (sink + file + routed
 #                        count, derived from the output parquet footers —
-#                        see file_lineage). rows_in/parsed/dropped are NULL
+#                        see file_lineage_rows). rows_in/parsed/dropped are NULL
 #                        at this granularity; per-file routed sums equal the
 #                        sentinel row's routed.
 LINEAGE_DDL = (
@@ -120,21 +120,23 @@ def fan_out_write(
 
 def file_lineage_rows(data_dir: str, sink_col: str = "sink") -> list[tuple]:
     """Per-file routed-row counts from parquet FOOTERS, read driver-side
-    with pyarrow — zero Spark jobs.
+    with pyarrow — zero Spark jobs. This is the only per-output-file
+    lineage path, for batch and streaming alike (``data_dir`` is a POSIX
+    path: ``pipeline.require_posix_dir`` rejects URIs up front).
 
     ``fan_out_write``'s (sink, salt)-keyed shuffle bounds the file count at
-    ~sinks × salt_buckets regardless of data size, so after the write the
-    per-file lineage is a handful of footer reads (~KBs each) — launching a
-    Spark job for it costs more than the answer (measured: the distributed
-    variant added ~13 s of cold-JVM WindowExec/metadata-scan codegen to the
-    benched pipeline; this list comprehension adds milliseconds). For a
-    layout whose file count is NOT bounded (no keyed shuffle, object store
-    with thousands of files), use the distributed ``file_lineage`` below.
+    ~sinks × salt_buckets regardless of data size (an unshuffled
+    micro-batch write: ~sinks × upstream partitions), so after the write
+    the per-file lineage is a handful of footer reads (~KBs each) —
+    launching a Spark job for it costs more than the answer (measured: a
+    distributed variant added ~13 s of cold-JVM WindowExec/metadata-scan
+    codegen to the benched pipeline; this list comprehension adds
+    milliseconds).
 
     Returns [(partition_id, sink, file, routed)] with partition_id a dense
-    0-based index over files ordered by path (same contract as
-    ``file_lineage``). The routed count per file is the footer's num_rows:
-    every row in a ``sink=<name>/`` directory was routed to that sink.
+    0-based index over files ordered by path. The sink is parsed from the
+    file's ``sink=<name>/`` directory and the routed count is the footer's
+    num_rows: every row in that directory was routed to that sink.
     """
     import pyarrow.parquet as pq
 
@@ -150,21 +152,6 @@ def file_lineage_rows(data_dir: str, sink_col: str = "sink") -> list[tuple]:
                 sink = unquote(part.split("=", 1)[1])
         rows.append((i, sink, f, pq.ParquetFile(f).metadata.num_rows))
     return rows
-
-
-def local_path(path: str) -> str | None:
-    """The POSIX path behind ``path``, or None when it names a non-local
-    filesystem. Driver-side footer/lineage shortcuts only apply to paths
-    the driver can os.open: plain paths and ``file:`` URIs qualify;
-    ``hdfs://``/``s3a://``/... do not (callers fall back to the
-    distributed variants)."""
-    if path.startswith("file://"):
-        return path[len("file://"):] or "/"
-    if path.startswith("file:"):
-        return path[len("file:"):]
-    if "://" in path:
-        return None
-    return path
 
 
 _ARROW_TYPES = {"string": "string", "long": "int64", "int": "int32"}
@@ -233,46 +220,6 @@ def source_file_rows(paths: list[str]) -> list[tuple]:
             ) from exc
         rows.append((i, p, n))
     return rows
-
-
-def file_lineage(spark, data_dir: str, sink_col: str = "sink") -> DataFrame:
-    """Distributed variant of ``file_lineage_rows`` — per-file routed-row
-    counts as a DataFrame, for layouts whose file count is unbounded
-    (object-store listings where a driver-side footer loop would
-    serialize on the driver instead of fanning out).
-
-    Cost model: the grouping keys are ``_metadata.file_path`` (file-level
-    constant) and the ``sink`` directory-partition column, so the scan's
-    ReadSchema is EMPTY — Spark's vectorized parquet reader answers the
-    count from row-group metadata without decoding a single data column.
-    A footer-only pass: ~KBs per file, distributed, regardless of data size.
-
-    Returns (partition_id, sink, file, routed) with partition_id a dense
-    0-based index over files (deterministic: ordered by path). The window
-    runs over a file-count-sized table (~sinks × salt_buckets rows after
-    fan_out_write's keyed shuffle), not the data.
-    """
-    from pyspark.sql.window import Window
-
-    df = spark.read.option("basePath", data_dir).parquet(data_dir)
-    # canonical file form: plain POSIX path for local files (matching the
-    # driver-side file_lineage_rows/source_file_rows emissions), scheme'd
-    # URI for genuinely remote files — _metadata.file_path is always a
-    # file: URI locally, which would otherwise leak a second representation
-    # into consumers joining lineage across modes/rounds
-    per_file = df.groupBy(
-        F.regexp_replace(
-            F.col("_metadata.file_path"), r"^file:(//)?", ""
-        ).alias("file"),
-        F.col(sink_col).alias("sink"),
-    ).agg(F.count(F.lit(1)).alias("routed"))
-    w = Window.orderBy("file")
-    return per_file.select(
-        (F.row_number().over(w) - 1).cast("int").alias("partition_id"),
-        "sink",
-        "file",
-        "routed",
-    )
 
 
 def sink_counts(routed_df: DataFrame, sink_col: str = "sink") -> DataFrame:

@@ -49,6 +49,99 @@ def build_stage_chain(
     return route(enriched, rules)
 
 
+def require_posix_dir(path: str) -> None:
+    """Reject a URI ``out_dir`` before anything is written.
+
+    Spark's Hadoop paths read a colon before the first slash as a scheme
+    (``file:``, ``hdfs://``, ``s3a://``), while the driver-side ledger,
+    lineage and footer reads go through ``os`` and would treat the same
+    string as a relative directory name — the data and its bookkeeping
+    would land in two different places."""
+    colon, slash = path.find(":"), path.find("/")
+    if colon != -1 and (slash == -1 or colon < slash):
+        raise ValueError(
+            f"out_dir must be a POSIX path, not a URI: {path!r}"
+        )
+
+
+def process_snapshot(
+    df: DataFrame | None,
+    dim: DataFrame,
+    rules: list[dict],
+    data_dir: str,
+    lineage_dir: str,
+    key: tuple,
+    ddl: str = LINEAGE_DDL,
+    parser: str = "builtin",
+    dim_keys: list[str] | None = None,
+    salt_partitions: int | None = None,
+    source_paths: list[str] | None = None,
+) -> None:
+    """Route one snapshot (or micro-batch) into ``data_dir`` and write its
+    lineage table to ``lineage_dir`` — the single write-and-lineage path
+    of both ``run_pipeline`` and ``streaming.stream.run_stream``.
+
+    ``df`` None is a snapshot with no input files: nothing is written but
+    a zero-count lineage row. ``key`` holds the leading lineage columns
+    (``ddl`` names them); every row ends in (partition_id, rows_in,
+    parsed, routed, dropped, sink, file). Three granularities, all
+    collected WITHOUT a second pass over the data:
+
+    - partition_id=-1, sink+file NULL → the observe() counters that ride
+      the write action;
+    - partition_id>=0, sink NOT NULL → one row per OUTPUT file, routed
+      from its parquet footer (``file_lineage_rows``);
+    - partition_id>=0, sink NULL → one row per file in ``source_paths``,
+      rows_in from its footer (``source_file_rows``).
+
+    Footers are read and the table written driver-side with pyarrow — no
+    Spark job (BENCH.md r4: job-based lineage cost 4.7-13 s per run). The
+    caller commits only after this returns."""
+    m = {"rows_in": 0, "parsed": 0, "routed": 0, "dropped": 0}
+    if df is not None:
+        routed = build_stage_chain(
+            df, dim, rules, parser=parser, dim_keys=dim_keys
+        )
+        # ONE action per snapshot: conservation counters ride the write via
+        # observe() (collected by a listener, zero extra reads) instead of
+        # a separate aggregation action over a persisted copy — the
+        # single-read/multi-write invariant of the reference's
+        # output.c:256-277, now including the bookkeeping. The observe
+        # node sits above the route stage and below fan_out_write's
+        # NULL-sink filter, so dropped rows are counted, then discarded.
+        obs = Observation("lineage_" + "_".join(map(str, key)))
+        routed = routed.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows_in"),
+            F.count("n_fields").alias("parsed"),
+            F.count("sink").alias("routed"),
+            F.coalesce(
+                F.sum(F.col("sink").isNull().cast("long")), F.lit(0)
+            ).alias("dropped"),
+        )
+        # the write-side shuffle keys by (sink, salt) — one sink per task,
+        # hot sinks spread over salt_buckets tasks, ~salt_partitions output
+        # files instead of tasks×sinks (repartition_salted by conv_id
+        # remains the right key when a downstream consumer, not the file
+        # layout, needs co-located conversations)
+        fan_out_write(routed, data_dir, shuffle_partitions=salt_partitions)
+        m = obs.get
+    rows = [
+        (*key, -1, m["rows_in"], m["parsed"], m["routed"], m["dropped"],
+         None, None)
+    ]
+    if m["routed"]:
+        rows += [
+            (*key, pid, None, None, n_routed, None, sink, f)
+            for pid, sink, f, n_routed in file_lineage_rows(data_dir)
+        ]
+    rows += [
+        (*key, pid, rows_in, None, None, None, None, f)
+        for pid, f, rows_in in source_file_rows(source_paths or [])
+    ]
+    write_lineage_parquet(rows, ddl, lineage_dir)
+
+
 def run_pipeline(
     spark: SparkSession,
     src_dir: str,
@@ -63,9 +156,11 @@ def run_pipeline(
     include_files: list[str] | None = None,
     exclude_files: list[str] | None = None,
     min_input_partitions: int | None = 0,
-    per_file_lineage: bool = True,
 ) -> dict:
-    """Process every pending snapshot under ``src_dir`` exactly once.
+    """Process every pending snapshot under ``src_dir`` exactly once: per
+    snapshot, ``process_snapshot`` writes the routed rows and the lineage
+    table (observe() totals, one row per output file, one row per input
+    file), then the ledger commits.
 
     ``min_input_partitions``: under-split sources (a snapshot that is one
     parquet file with one row group is ONE scan task — the whole
@@ -83,131 +178,56 @@ def run_pipeline(
     ``fail_after_write_snapshot``: test hook — raise after writing (before
     committing) that snapshot, simulating a worker crash at the worst moment.
 
-    ``per_file_lineage``: include the per-OUTPUT-file rows (read from the
-    written parquet footers). Snapshot totals and per-INPUT-file rows are
-    always written. Explicit kwarg, not ambient env, so a bench A/B can't
-    leak into production behavior.
+    Path contract: ``src_dir`` and ``out_dir`` must be POSIX paths — the
+    ledger, the footer reads and the lineage write are all driver-side
+    ``os``/pyarrow calls, and a URI ``out_dir`` raises ValueError before
+    anything is written (the documented object-store swap is an Iceberg
+    catalog, which replaces the ledger and the lineage wholesale).
 
-    Path contract: ``src_dir``/``out_dir`` must be POSIX-visible — the
-    snapshot ledger itself is os-level (see ledger.py; the documented
-    object-store swap is an Iceberg catalog, which replaces the ledger AND
-    the footer reads wholesale). The driver-side pyarrow footer reads
-    share that contract; the distributed ``operators.sinks.file_lineage``
-    exists for layouts where it doesn't hold.
-
-    Returns {run_id, processed: [snapshot ids], lineage_rows: int}.
+    Returns {run_id, processed: [snapshot ids]}.
     """
     from logpipe_spark.sources.readers import select_input_files
 
+    require_posix_dir(out_dir)
     run_id = run_id or uuid.uuid4().hex[:12]
     ledger = SnapshotLedger(out_dir)
-    data_root = os.path.join(out_dir, "data")
-    lineage_root = os.path.join(out_dir, "lineage")
     processed = []
 
     for snap in ledger.pending(src_dir):
         snap_dir = os.path.join(src_dir, f"snapshot={snap}")
-        src_paths = None
         if include_files or exclude_files:
-            src_paths = paths = select_input_files(
-                snap_dir, include_files, exclude_files
-            )
-            if not paths:
-                write_lineage_parquet(
-                    [(run_id, int(snap), -1, 0, 0, 0, 0, None, None)],
-                    LINEAGE_DDL,
-                    os.path.join(lineage_root, f"snapshot={snap}"),
-                )
-                ledger.commit(snap, run_id)
-                processed.append(snap)
-                continue
-            df = spark.read.parquet(*paths)
+            src_paths = select_input_files(snap_dir, include_files, exclude_files)
+            df = spark.read.parquet(*src_paths) if src_paths else None
         else:
-            df = spark.read.parquet(snap_dir)
-        if min_input_partitions is not None:
-            target = min_input_partitions or spark.sparkContext.defaultParallelism
-            # getNumPartitions reads the plan, not the data — no job runs
-            if df.rdd.getNumPartitions() < target:
-                df = df.repartition(target)
-        routed = build_stage_chain(df, dim, rules, parser=parser, dim_keys=dim_keys)
-
-        # ONE action per snapshot: conservation counters ride the write via
-        # observe() (collected by a listener, zero extra reads) instead of a
-        # separate aggregation action over a persisted copy — the
-        # single-read/multi-write invariant of the reference's
-        # output.c:256-277, now including the bookkeeping. The observe node
-        # sits above the route stage and below fan_out_write's NULL-sink
-        # filter, so dropped rows are counted, then discarded.
-        obs = Observation(f"lineage_{run_id}_s{snap}")
-        routed = routed.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows_in"),
-            F.count("n_fields").alias("parsed"),
-            F.count("sink").alias("routed"),
-            F.coalesce(
-                F.sum(F.col("sink").isNull().cast("long")), F.lit(0)
-            ).alias("dropped"),
-        )
-        # the write-side shuffle keys by (sink, salt) — one sink per task,
-        # hot sinks spread over salt_buckets tasks, ~salt_partitions output
-        # files instead of tasks×sinks (repartition_salted by conv_id
-        # remains the right key when a downstream consumer, not the file
-        # layout, needs co-located conversations)
-        snap_data = os.path.join(data_root, f"snapshot={snap}")
-        fan_out_write(routed, snap_data, shuffle_partitions=salt_partitions)
-
-        m = obs.get
-        # Three granularities in one tiny table, all collected WITHOUT a
-        # second pass over the data:
-        #   partition_id=-1, sink+file NULL  → whole-snapshot observe()
-        #                                      counters (ride the write);
-        #   partition_id>=0, sink NOT NULL   → one row per OUTPUT file
-        #                                      (routed from its footer);
-        #   partition_id>=0, sink NULL       → one row per INPUT file
-        #                                      (rows_in from its footer).
-        # Footers are read driver-side with pyarrow: fan_out_write's keyed
-        # shuffle bounds output files at ~sinks×salt_buckets, so this is a
-        # handful of KB-sized reads — the previous Spark-job variant
-        # (file_lineage + Window) cost ~13 s of cold-JVM codegen per bench
-        # run for the same rows (BENCH.md r4 A/B).
-        lineage_rows = [
-            (
-                run_id, int(snap), -1,
-                m["rows_in"], m["parsed"], m["routed"], m["dropped"],
-                None, None,
-            )
-        ]
-        if m["routed"] and per_file_lineage:
-            for pid, sink, f, n_routed in file_lineage_rows(snap_data):
-                lineage_rows.append(
-                    (run_id, int(snap), pid, None, None, n_routed, None, sink, f)
-                )
-        if src_paths is None:
-            # mirror Spark's data-file rule: every non-hidden FILE at any
-            # depth counts (a parquet part without the .parquet suffix is
-            # still read by the scan, and a partitioned subdirectory's
-            # parts are too, so both must appear in the input-edge lineage
-            # or conservation breaks); directories themselves are walked,
-            # never handed to the footer reader — a flat listing here once
-            # fed a subdirectory to pq.ParquetFile, crashing after the
-            # data write and poisoning every resume
+            # Spark's data-file rule: every non-hidden FILE at any depth is
+            # scanned (a part without the .parquet suffix, a partitioned
+            # subdirectory's parts), so each needs an input-edge lineage
+            # row; directories are walked, never handed to the footer reader
             src_paths = []
-            for dirpath, dirnames, filenames in os.walk(snap_dir):
+            for dirpath, dirnames, names in os.walk(snap_dir):
                 dirnames[:] = sorted(
                     d for d in dirnames if not d.startswith((".", "_"))
                 )
                 src_paths += [
                     os.path.join(dirpath, n)
-                    for n in filenames
+                    for n in names
                     if not n.startswith((".", "_"))
                 ]
-        for pid, f, rows_in in source_file_rows(src_paths):
-            lineage_rows.append(
-                (run_id, int(snap), pid, rows_in, None, None, None, None, f)
-            )
-        write_lineage_parquet(
-            lineage_rows, LINEAGE_DDL,
-            os.path.join(lineage_root, f"snapshot={snap}"),
+            df = spark.read.parquet(snap_dir)
+        if df is not None and min_input_partitions is not None:
+            target = min_input_partitions or spark.sparkContext.defaultParallelism
+            # getNumPartitions reads the plan, not the data — no job runs
+            if df.rdd.getNumPartitions() < target:
+                df = df.repartition(target)
+        process_snapshot(
+            df, dim, rules,
+            os.path.join(out_dir, "data", f"snapshot={snap}"),
+            os.path.join(out_dir, "lineage", f"snapshot={snap}"),
+            (run_id, int(snap)),
+            parser=parser,
+            dim_keys=dim_keys,
+            salt_partitions=salt_partitions,
+            source_paths=src_paths,
         )
 
         if fail_after_write_snapshot == snap:

@@ -135,6 +135,8 @@ class PipelineSpec:
             available_now=available_now,
             timeout_sec=timeout_sec,
             trigger_interval_us=self.poll_interval_us,
+            parser=self.parser,
+            dim_keys=self.dim_keys,
         )
 
 

@@ -14,8 +14,9 @@ Reference mapping:
 - monitor restart loop (`src/monitor.c:89-181`) → just restart the query
   with the same checkpointLocation.
 
-The per-batch body reuses the exact batch stage chain (parse → enrich →
-route) — one code path for both execution modes.
+The per-batch body is batch mode's per-snapshot body
+(``pipeline.process_snapshot``: parse → enrich → route → fan-out write →
+driver-side lineage) — one code path for both execution modes.
 """
 
 from __future__ import annotations
@@ -23,10 +24,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from logpipe_spark.pipeline import build_stage_chain
+from logpipe_spark.pipeline import process_snapshot, require_posix_dir
 
 TRANSCRIPT_SCHEMA = T.StructType(
     [
@@ -39,6 +39,12 @@ TRANSCRIPT_SCHEMA = T.StructType(
     ]
 )
 
+# per-batch lineage: pipeline.process_snapshot's rows keyed by batch id
+STREAM_LINEAGE_DDL = (
+    "batch_id long, partition_id int, rows_in long, parsed long, "
+    "routed long, dropped long, sink string, file string"
+)
+
 
 def run_stream(
     spark: SparkSession,
@@ -49,9 +55,16 @@ def run_stream(
     available_now: bool = True,
     timeout_sec: int = 300,
     trigger_interval_us: int | None = None,
+    parser: str = "builtin",
+    dim_keys: list[str] | None = None,
 ) -> dict:
     """Micro-batch the source dir through the pipeline into partitioned
     sinks + per-batch lineage, exactly once per batch id.
+
+    Each micro-batch goes through ``pipeline.process_snapshot`` — the same
+    stage chain, fan-out write and driver-side lineage as batch mode,
+    keyed by batch id (``STREAM_LINEAGE_DDL``). ``out_dir`` must be a
+    POSIX path (ValueError otherwise, before the checkpoint is created).
 
     ``trigger_interval_us``: continuous-tail poll period (the reference's
     min/max_usleep backoff, `logpipe-input-file.c` config via
@@ -60,6 +73,7 @@ def run_stream(
 
     Returns {"batches": n} after the query drains (available_now) or
     times out."""
+    require_posix_dir(out_dir)
     checkpoint = os.path.join(out_dir, "_checkpoint")
     data_root = os.path.join(out_dir, "data")
     lineage_root = os.path.join(out_dir, "lineage")
@@ -72,86 +86,16 @@ def run_stream(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Observation
-
-        # same single-action shape as batch mode: conservation counters
-        # ride the sink write via observe() — no persist, no second pass
-        routed = build_stage_chain(batch_df, dim, rules)
-        obs = Observation(f"stream_lineage_b{batch_id}")
-        routed = routed.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows_in"),
-            F.count("n_fields").alias("parsed"),
-            F.count("sink").alias("routed"),
-            F.coalesce(
-                F.sum(F.col("sink").isNull().cast("long")), F.lit(0)
-            ).alias("dropped"),
+        # fan_out_write overwrites the batch dir: a replayed batch id is idempotent
+        process_snapshot(
+            batch_df, dim, rules,
+            os.path.join(data_root, f"batch={batch_id}"),
+            os.path.join(lineage_root, f"batch={batch_id}"),
+            (int(batch_id),),
+            ddl=STREAM_LINEAGE_DDL,
+            parser=parser,
+            dim_keys=dim_keys,
         )
-        (
-            routed.filter(F.col("sink").isNotNull())
-            .write.mode("overwrite")  # overwrite per batch dir = idempotent replay
-            .partitionBy("sink")
-            .parquet(os.path.join(data_root, f"batch={batch_id}"))
-        )
-        m = obs.get
-        ddl = (
-            "batch_id long, partition_id int, rows_in long, parsed long, "
-            "routed long, dropped long, sink string, file string"
-        )
-        lineage_rows = [
-            (
-                int(batch_id), -1,  # -1 = whole-batch counters
-                m["rows_in"], m["parsed"], m["routed"], m["dropped"],
-                None, None,
-            )
-        ]
-        batch_data = os.path.join(data_root, f"batch={batch_id}")
-        batch_lineage = os.path.join(lineage_root, f"batch={batch_id}")
-        # unlike the batch pipeline (whose ledger pins out_dir to a POSIX
-        # path), streaming writes through Hadoop FS — driver-side pyarrow
-        # only applies to paths the driver can os.open (plain or file:
-        # URIs, normalized); any other scheme keeps the distributed
-        # metadata-only pass
-        from logpipe_spark.operators.sinks import local_path
-
-        local_data = local_path(batch_data)
-        local_lineage = local_path(batch_lineage)
-        if m["routed"] and local_data is not None:
-            # per-file granularity from the just-written parquet footers,
-            # read driver-side with pyarrow (sinks.file_lineage_rows) —
-            # the file count is bounded by sinks × upstream partitions per
-            # micro-batch, so a Spark job per batch would cost more than
-            # the answer (same A/B as the batch pipeline, BENCH.md r4)
-            from logpipe_spark.operators.sinks import file_lineage_rows
-
-            lineage_rows += [
-                (int(batch_id), pid, None, None, routed, None, sink, f)
-                for pid, sink, f, routed in file_lineage_rows(local_data)
-            ]
-        if local_lineage is not None:
-            # driver-side pyarrow write: a per-batch Spark job for ~10
-            # rows of metadata would dominate micro-batch latency
-            from logpipe_spark.operators.sinks import write_lineage_parquet
-
-            write_lineage_parquet(lineage_rows, ddl, local_lineage)
-        else:
-            from logpipe_spark.operators.sinks import file_lineage
-
-            spark = batch_df.sparkSession
-            lineage = spark.createDataFrame(lineage_rows, ddl)
-            if m["routed"]:
-                per_file = file_lineage(spark, batch_data).select(
-                    F.lit(int(batch_id)).alias("batch_id"),
-                    "partition_id",
-                    F.lit(None).cast("long").alias("rows_in"),
-                    F.lit(None).cast("long").alias("parsed"),
-                    F.col("routed").cast("long").alias("routed"),
-                    F.lit(None).cast("long").alias("dropped"),
-                    "sink",
-                    "file",
-                )
-                lineage = lineage.unionByName(per_file)
-            lineage.write.mode("overwrite").parquet(batch_lineage)
         seen["batches"] += 1
 
     writer = (

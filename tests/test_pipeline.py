@@ -200,6 +200,42 @@ def test_partitioned_snapshot_layout_keeps_lineage_conservation(
     )
 
 
+@pytest.mark.parametrize("scheme", ["file://", "file:", "hdfs://nn", "s3a://bucket"])
+def test_run_pipeline_rejects_uri_out_dir(spark, dim_df, rules, tmp_path, scheme):
+    """Spark would write the data under the URI's path while the ledger
+    went to a relative ``./file:/...`` dir, so a URI out_dir is refused by
+    name before anything is written."""
+    out = f"{scheme}{tmp_path}/out"
+    with pytest.raises(ValueError, match="POSIX") as exc:
+        run_pipeline(spark, str(tmp_path / "src"), out, dim_df, rules)
+    assert repr(out) in str(exc.value)
+    assert not (tmp_path / "out").exists()
+    assert not os.path.exists(out)
+
+
+@pytest.mark.parametrize("manifest_text", ['{"committed": [', "{}"])
+def test_corrupt_ledger_raises_naming_manifest(
+    spark, transcripts_pdf, dim_df, rules, tmp_path, manifest_text
+):
+    """A truncated or malformed _ledger.json is a ValueError naming the
+    manifest — from both the writer and the reader — and the writer
+    writes no data."""
+    import re
+
+    src = str(tmp_path / "src")
+    out = tmp_path / "out"
+    write_snapshots(transcripts_pdf, src, n_snapshots=2)
+    out.mkdir()
+    manifest = out / "_ledger.json"
+    manifest.write_text(manifest_text)
+    with pytest.raises(ValueError, match=re.escape(str(manifest))):
+        run_pipeline(spark, src, str(out), dim_df, rules)
+    with pytest.raises(ValueError, match=re.escape(str(manifest))):
+        read_sinks(spark, str(out))
+    assert not (out / "data").exists()
+    assert not (out / "lineage").exists()
+
+
 def test_source_file_rows_names_unreadable_path():
     from logpipe_spark.operators.sinks import source_file_rows
 

@@ -196,6 +196,42 @@ def test_spec_run_streaming_consumes_poll_interval(spark, transcripts_pdf, rules
     assert read_stream_sinks(spark, out).count() > 0
 
 
+def test_spec_run_streaming_honours_dim_keys(spark, transcripts_pdf, rules, tmp_path):
+    """run_streaming enriches on the spec's dim_keys (here a tool-only dim
+    with no role column, so a ["tool", "role"] join could not resolve)
+    and routes exactly like the batch run."""
+    from logpipe_spark.fixtures import gen_tool_role_dim
+    from logpipe_spark.streaming.stream import read_stream_sinks
+
+    src = str(tmp_path / "src")
+    write_snapshots(transcripts_pdf, src, n_snapshots=2)
+    dim = (
+        gen_tool_role_dim()[["tool", "tool_family"]]
+        .drop_duplicates("tool")
+        .to_dict("records")
+    )
+
+    def spec(out):
+        return PipelineSpec.from_json(json.dumps({
+            "source_dir": src, "out_dir": str(tmp_path / out), "rules": rules,
+            "dim": dim, "dim_keys": ["tool"],
+        }))
+
+    def counts(df):
+        return {
+            r["sink"]: r["n"]
+            for r in df.groupBy("sink").agg(F.count(F.lit(1)).alias("n")).collect()
+        }
+
+    spec("batch").run(spark)
+    assert spec("stream").run_streaming(spark, timeout_sec=120)["batches"] >= 1
+    batch = read_sinks(spark, str(tmp_path / "batch"))
+    stream = read_stream_sinks(spark, str(tmp_path / "stream"))
+    assert "role" not in dim[0]
+    assert stream.filter(F.col("tool_family").isNotNull()).count() > 0
+    assert counts(stream) == counts(batch)
+
+
 def test_units_overflow_is_value_error():
     from logpipe_spark.functions.units import parse_duration_us, parse_size_bytes
 

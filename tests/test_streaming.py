@@ -89,6 +89,26 @@ def test_stream_lineage_conservation(spark, stream_env, golden, transcripts_pdf)
         for r in totals.filter(F.col("routed") > 0).collect()
     }
     assert per_batch == tot_batch
+    # the per-file rows carry the sink parsed from each output file's
+    # directory; per sink they cover at least the original corpus
+    per_sink = {
+        r["sink"]: r["s"]
+        for r in per_file.groupBy("sink").agg(F.sum("routed").alias("s")).collect()
+    }
+    for sink, n in golden["sink_counts"].items():
+        assert per_sink.get(sink, 0) >= n, sink
+
+
+def test_run_stream_rejects_uri_out_dir(spark, dim_df, rules, tmp_path):
+    """A URI out_dir is refused before the query starts: no checkpoint
+    (and no data) is created under the URI's path."""
+    src = tmp_path / "src"
+    src.mkdir()
+    out = f"file://{tmp_path}/out"
+    with pytest.raises(ValueError, match="POSIX"):
+        run_stream(spark, str(src), out, dim_df, rules)
+    assert not (tmp_path / "out" / "_checkpoint").exists()
+    assert not (tmp_path / "out").exists()
 
 
 def test_windowed_watermark_stream(spark, transcripts_pdf, tmp_path):
