@@ -31,8 +31,9 @@ import time
 class SnapshotLedger:
     def __init__(self, out_dir: str):
         self.out_dir = out_dir
+        # no makedirs here: readers (read_sinks, read_lineage) build a
+        # ledger too, and a mistyped path must not leave a directory behind
         self.manifest_path = os.path.join(out_dir, "_ledger.json")
-        os.makedirs(out_dir, exist_ok=True)
 
     # -- source side -------------------------------------------------------
     @staticmethod
@@ -87,6 +88,7 @@ class SnapshotLedger:
                 "metrics": metrics or {},
             }
         )
+        os.makedirs(self.out_dir, exist_ok=True)
         tmp = self.manifest_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(state, f)
@@ -95,6 +97,13 @@ class SnapshotLedger:
             f.flush()
             os.fsync(f.fileno())
         os.replace(tmp, self.manifest_path)
+        # the rename is a directory entry: sync the directory so the commit
+        # itself survives a crash, not just the manifest's bytes
+        fd = os.open(self.out_dir, os.O_RDONLY)
+        try:
+            os.fsync(fd)
+        finally:
+            os.close(fd)
 
 
 def write_snapshots(pdf, src_dir: str, n_snapshots: int) -> list[int]:

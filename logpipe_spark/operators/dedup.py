@@ -736,14 +736,15 @@ def _pos_spans(text: Column, n: int) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def _span_key(span: Column, digest: bool) -> Column:
-    """Join/group key for a span: the raw string (byte-parity with the
-    SQL oracles), or its 16-byte md5 digest — the production form: a
+def _span_key(span: Column) -> Column:
+    """Join/group key for a span or line: its 16-byte md5 digest. A
     60-byte average 8-gram string becomes a fixed 16-byte binary, so the
     span-keyed shuffles move ~4× fewer key bytes. Collisions are a
     non-issue at any corpus size (2^-64 birthday bound needs ~2^64
-    distinct spans)."""
-    return F.unhex(F.md5(span)) if digest else span
+    distinct spans), and the output is the same as keying by the raw
+    string: the DuckDB oracles group by the raw string
+    (tests/test_entry_contract.py)."""
+    return F.unhex(F.md5(span))
 
 
 def dup_span_stats(
@@ -752,7 +753,6 @@ def dup_span_stats(
     min_docs: int = 2,
     text_col: str = "text",
     key_col: str = "doc_id",
-    digest_spans: bool = False,
 ) -> DataFrame:
     """Per-document duplicated-span statistics: how many of a doc's token
     n-gram positions carry a span that also appears in ≥ ``min_docs``
@@ -771,16 +771,12 @@ def dup_span_stats(
     duplicated-span set on the span key → groupBy(doc) counts (id-keyed).
     No pairwise term at all — unlike ngram_jaccard_pairs there is no
     per-shingle quadratic, so no hot-shingle cap is needed; the widest
-    shuffle is O(total token positions). ``digest_spans=True`` keys the
-    shuffles by the 16-byte md5 of each span instead of the raw string —
-    the production form (~4× fewer shuffle key bytes for 8-gram spans;
-    output is identical, asserted by test); the default stays raw
-    strings so the DuckDB oracle is byte-identical with zero collision
-    caveats."""
+    shuffle is O(total token positions), keyed by the 16-byte md5 of each
+    span (``_span_key``)."""
     spans = docs.select(
         F.col(key_col).alias("doc"),
         F.explode(_pos_spans(F.col(text_col), n)).alias("_raw"),
-    ).select("doc", _span_key(F.col("_raw"), digest_spans).alias("span"))
+    ).select("doc", _span_key(F.col("_raw")).alias("span"))
     dup = (
         spans.select("doc", "span")
         .distinct()
@@ -814,7 +810,6 @@ def remove_dup_spans(
     min_docs: int = 2,
     text_col: str = "text",
     key_col: str = "doc_id",
-    digest_spans: bool = False,
 ) -> DataFrame:
     """Rewrite each document with cross-document duplicated spans REMOVED —
     the removal half of the FineWeb/RefinedWeb span-dedup recipe whose
@@ -834,17 +829,15 @@ def remove_dup_spans(
     positions and distinct on (doc, position), (4) left-anti join of the
     token positions against the covered set (shuffle keyed by (doc, pos)),
     (5) groupBy(doc) ordered reassembly. The widest shuffle is O(total
-    token positions) keyed by span — same bound as dup_span_stats.
-    ``digest_spans=True`` keys steps 2-4 by the 16-byte md5 of each span
-    — the production form (output identical, asserted by test); the
-    default stays raw strings so the DuckDB oracle is byte-identical."""
+    token positions) keyed by span — same bound as dup_span_stats; steps
+    2-4 key by the 16-byte md5 of each span (``_span_key``)."""
     spans = docs.select(
         F.col(key_col).alias("doc"),
         F.posexplode(_pos_spans(F.col(text_col), n)).alias("pos0", "_raw"),
     ).select(
         "doc",
         (F.col("pos0") + 1).alias("pos"),
-        _span_key(F.col("_raw"), digest_spans).alias("span"),
+        _span_key(F.col("_raw")).alias("span"),
     )
     dup = (
         spans.select("doc", "span")
@@ -898,7 +891,6 @@ def dedup_lines(
     text_col: str = "text",
     key_col: str = "doc_id",
     delim: str = "\n",
-    digest_lines: bool = False,
 ) -> DataFrame:
     """Line-level exact dedup — the C4 / RefinedWeb boilerplate recipe:
     any line (trimmed, case-preserved) that occurs in ≥ ``min_docs``
@@ -919,10 +911,8 @@ def dedup_lines(
     — ONE shuffle keyed by line, partial agg collapses within-doc repeats
     map-side. (3) left join positions against the ≥min_docs line set (same
     line-keyed shuffle), (4) groupBy(doc) ordered reassembly (id-keyed).
-    ``digest_lines=True`` keys steps 2-3 by the 16-byte md5 of each
-    line — the production form (output identical, asserted by test);
-    the default stays raw strings so the DuckDB oracle is
-    byte-identical with zero collision caveats. Skew note: a universal
+    Steps 2-3 key by the 16-byte md5 of each trimmed line (``_span_key``);
+    a blank line is one whose key is md5(''). Skew note: a universal
     boilerplate line ("END" in a billion docs) is a maximally hot key in
     step 3's join — broadcast the dup set when it fits (it usually does:
     duplicated lines ≪ all lines), else AQE skew-join splits the probe
@@ -935,11 +925,10 @@ def dedup_lines(
         "doc",
         (F.col("pos0") + 1).alias("pos"),
         "raw",
-        _span_key(F.trim(F.col("raw")), digest_lines).alias("line"),
+        _span_key(F.trim(F.col("raw"))).alias("line"),
     )
-    blank = F.unhex(F.md5(F.lit(""))) if digest_lines else F.lit("")
     dup = (
-        lines.filter(F.col("line") != blank)
+        lines.filter(F.col("line") != _span_key(F.lit("")))
         .select("doc", "line")
         .distinct()
         .groupBy("line")

@@ -49,83 +49,72 @@ LINEAGE_DDL = (
 )
 
 
+# salt buckets per sink in the write-side shuffle (and repartition_salted's
+# default): a hot sink spreads over this many tasks and files
+SALT_BUCKETS = 8
+
+
 def repartition_salted(
     df: DataFrame,
     num_partitions: int,
     key: str = "conv_id",
-    salt_buckets: int = 8,
-    salt_on: str = "turn_idx",
+    salt_buckets: int = SALT_BUCKETS,
 ) -> DataFrame:
-    """Shuffle by (key, hash(salt_on) % salt_buckets) so a hot key spreads
+    """Shuffle by (key, hash(turn_idx) % salt_buckets) so a hot key spreads
     over ``salt_buckets`` partitions instead of one straggler task.
 
     Verification-time ordering is unaffected: the (conv_id, turn_idx)
     invariant is asserted with an ORDER BY, never by partition layout
     (SURVEY.md §7.3 hard part (b))."""
-    salt = F.pmod(F.hash(F.col(salt_on)), F.lit(salt_buckets))
+    salt = F.pmod(F.hash(F.col("turn_idx")), F.lit(salt_buckets))
     return df.repartition(num_partitions, F.col(key), salt)
 
 
 def fan_out_write(
     routed_df: DataFrame,
     out_dir: str,
-    sink_col: str = "sink",
-    mode: str = "overwrite",
-    extra_partition_cols: list[str] | None = None,
     shuffle_partitions: int | None = None,
-    salt_on: str | None = None,
-    salt_buckets: int = 8,
-    max_records_per_file: int | None = None,
 ) -> None:
     """Single-pass dynamic-partitioned fan-out: every routed row lands in
-    ``out_dir/sink=<name>/``. Dropped (NULL-sink) rows are filtered here —
-    after lineage counted them.
+    ``out_dir/sink=<name>/``, replacing whatever ``out_dir`` held (overwrite
+    is what makes a replayed snapshot or batch idempotent). Dropped
+    (NULL-sink) rows are filtered here — after lineage counted them.
 
     ``shuffle_partitions``: pre-write shuffle keyed by **(sink, salt)**.
-    The shuffle has only sinks × salt_buckets distinct keys, so the file
-    count is bounded by ~sinks × salt_buckets regardless of task count
+    The shuffle has only sinks × SALT_BUCKETS distinct keys, so the file
+    count is bounded by sinks × SALT_BUCKETS regardless of task count
     (hash collisions can merge two key-groups into one task, which the
     writer re-splits per sink — the bound still holds), instead of
     tasks × sinks when the shuffle is keyed by a high-cardinality column.
-    The salt spreads a hot sink over ``salt_buckets`` tasks instead of one
-    straggler. Without it the write inherits upstream partitioning (fine
+    The salt spreads a hot sink over SALT_BUCKETS tasks instead of one
+    straggler; it is ``hash(turn_idx)`` when that column exists (the
+    transcript schema's cheap high-card column), else ``xxhash64`` over
+    all columns, so the helper works on any DataFrame (ADVICE r2). Without
+    ``shuffle_partitions`` the write inherits upstream partitioning (fine
     when the input is already well-split and sinks are few).
 
-    ``salt_on``: column to derive the salt from. Default None auto-picks:
-    ``turn_idx`` when present (the transcript schema's cheap high-card
-    column), else a hash over all columns — so the helper works on any
-    DataFrame, not just transcripts (ADVICE r2).
-
-    ``max_records_per_file``: upper-bound rows per output file (Spark's
-    per-write knob, not a shuffle) — the write-time half of the
-    small/large-file control; the read-time half is
-    ``operators/compact.py`` for files that came out too SMALL. Set it
-    from target_bytes / avg_row_bytes; 0/None = no cap."""
-    parts = [sink_col] + (extra_partition_cols or [])
-    df = routed_df.filter(F.col(sink_col).isNotNull())
+    Rows per file are not capped here: size rotation lives in
+    ``writers.write_partitioned_by_key`` / ``write_text_lines``, and
+    ``operators/compact.py`` merges files that came out too small."""
+    df = routed_df.filter(F.col("sink").isNotNull())
     if shuffle_partitions:
-        if salt_on is None and "turn_idx" in df.columns:
-            salt_on = "turn_idx"
         salt_src = (
-            F.hash(F.col(salt_on)) if salt_on is not None
+            F.hash(F.col("turn_idx")) if "turn_idx" in df.columns
             else F.xxhash64(*[F.col(c) for c in df.columns])
         )
-        salt = F.pmod(salt_src, F.lit(salt_buckets))
-        df = df.repartition(shuffle_partitions, F.col(sink_col), salt)
-    writer = df.write.mode(mode)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.partitionBy(*parts).parquet(out_dir)
+        salt = F.pmod(salt_src, F.lit(SALT_BUCKETS))
+        df = df.repartition(shuffle_partitions, F.col("sink"), salt)
+    df.write.mode("overwrite").partitionBy("sink").parquet(out_dir)
 
 
-def file_lineage_rows(data_dir: str, sink_col: str = "sink") -> list[tuple]:
+def file_lineage_rows(data_dir: str) -> list[tuple]:
     """Per-file routed-row counts from parquet FOOTERS, read driver-side
     with pyarrow — zero Spark jobs. This is the only per-output-file
     lineage path, for batch and streaming alike (``data_dir`` is a POSIX
     path: ``pipeline.require_posix_dir`` rejects URIs up front).
 
     ``fan_out_write``'s (sink, salt)-keyed shuffle bounds the file count at
-    ~sinks × salt_buckets regardless of data size (an unshuffled
+    sinks × SALT_BUCKETS regardless of data size (an unshuffled
     micro-batch write: ~sinks × upstream partitions), so after the write
     the per-file lineage is a handful of footer reads (~KBs each) —
     launching a Spark job for it costs more than the answer (measured: a
@@ -147,7 +136,7 @@ def file_lineage_rows(data_dir: str, sink_col: str = "sink") -> list[tuple]:
     for i, f in enumerate(files):
         sink = None
         for part in os.path.relpath(f, data_dir).split(os.sep):
-            if part.startswith(sink_col + "="):
+            if part.startswith("sink="):
                 # Spark %-escapes special chars in partition dir names
                 sink = unquote(part.split("=", 1)[1])
         rows.append((i, sink, f, pq.ParquetFile(f).metadata.num_rows))
@@ -222,12 +211,12 @@ def source_file_rows(paths: list[str]) -> list[tuple]:
     return rows
 
 
-def sink_counts(routed_df: DataFrame, sink_col: str = "sink") -> DataFrame:
+def sink_counts(routed_df: DataFrame) -> DataFrame:
     """Per-sink aggregate counts (partial+final hash agg — Catalyst default),
     the §2.5 aggregate requirement: count + distinct convs + total text bytes."""
     return (
-        routed_df.filter(F.col(sink_col).isNotNull())
-        .groupBy(sink_col)
+        routed_df.filter(F.col("sink").isNotNull())
+        .groupBy("sink")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.countDistinct("conv_id").alias("n_convs"),

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from logpipe_spark.ledger import SnapshotLedger
 from logpipe_spark.operators.enrich import enrich
-from logpipe_spark.operators.parse import extract_builtin, extract_pandas
+from logpipe_spark.operators.parse import extract_builtin
 from logpipe_spark.operators.route import route
 from logpipe_spark.operators.sinks import (
     LINEAGE_DDL,
@@ -38,13 +38,11 @@ def build_stage_chain(
     df: DataFrame,
     dim: DataFrame,
     rules: list[dict],
-    parser: str = "builtin",
     dim_keys: list[str] | None = None,
 ) -> DataFrame:
     """parse → enrich → route on an already-loaded transcript DataFrame.
     Returns the routed DataFrame (sink column nullable; NULL = dropped)."""
-    parse = extract_pandas if parser == "pandas" else extract_builtin
-    parsed = parse(df)
+    parsed = extract_builtin(df)
     enriched = enrich(parsed, dim, keys=dim_keys or ["tool", "role"], how="left")
     return route(enriched, rules)
 
@@ -72,7 +70,6 @@ def process_snapshot(
     lineage_dir: str,
     key: tuple,
     ddl: str = LINEAGE_DDL,
-    parser: str = "builtin",
     dim_keys: list[str] | None = None,
     salt_partitions: int | None = None,
     source_paths: list[str] | None = None,
@@ -99,9 +96,7 @@ def process_snapshot(
     caller commits only after this returns."""
     m = {"rows_in": 0, "parsed": 0, "routed": 0, "dropped": 0}
     if df is not None:
-        routed = build_stage_chain(
-            df, dim, rules, parser=parser, dim_keys=dim_keys
-        )
+        routed = build_stage_chain(df, dim, rules, dim_keys=dim_keys)
         # ONE action per snapshot: conservation counters ride the write via
         # observe() (collected by a listener, zero extra reads) instead of
         # a separate aggregation action over a persisted copy — the
@@ -120,7 +115,7 @@ def process_snapshot(
             ).alias("dropped"),
         )
         # the write-side shuffle keys by (sink, salt) — one sink per task,
-        # hot sinks spread over salt_buckets tasks, ~salt_partitions output
+        # hot sinks spread over SALT_BUCKETS tasks, ~salt_partitions output
         # files instead of tasks×sinks (repartition_salted by conv_id
         # remains the right key when a downstream consumer, not the file
         # layout, needs co-located conversations)
@@ -149,31 +144,35 @@ def run_pipeline(
     dim: DataFrame,
     rules: list[dict],
     run_id: str | None = None,
-    parser: str = "builtin",
     salt_partitions: int | None = None,
     fail_after_write_snapshot: int | None = None,
     dim_keys: list[str] | None = None,
     include_files: list[str] | None = None,
     exclude_files: list[str] | None = None,
-    min_input_partitions: int | None = 0,
 ) -> dict:
     """Process every pending snapshot under ``src_dir`` exactly once: per
     snapshot, ``process_snapshot`` writes the routed rows and the lineage
     table (observe() totals, one row per output file, one row per input
     file), then the ledger commits.
 
-    ``min_input_partitions``: under-split sources (a snapshot that is one
-    parquet file with one row group is ONE scan task — the whole
-    parse→route stage runs single-threaded no matter how many cores) are
-    repartitioned up to this many partitions before parsing. Default 0 →
-    the session's default parallelism. Pass None to disable. Well-split
-    sources are never touched, so at scale this is a free plan check.
+    ``salt_partitions``: the write-side shuffle width (``fan_out_write``'s
+    ``shuffle_partitions``); None writes with the upstream partitioning.
+
+    Under-split sources (a snapshot that is one parquet file with one row
+    group is ONE scan task — the whole parse→route stage runs
+    single-threaded no matter how many cores) are repartitioned up to the
+    session's default parallelism before parsing. Well-split sources are
+    never touched, so at scale this is a free plan check.
 
     ``include_files`` / ``exclude_files``: source-level basename glob
     filters (the reference's files../exclude_files.. walk) — pruned from
     the file LIST before the scan, so excluded files cost zero IO. A
     snapshot whose files are all filtered out commits with zero-row
     lineage (the reference likewise commits nothing and moves on).
+
+    A snapshot directory with no data files (empty, or only ``_SUCCESS``
+    and other hidden sidecars) raises FileNotFoundError naming it before
+    anything of that snapshot is read or written, with or without globs.
 
     ``fail_after_write_snapshot``: test hook — raise after writing (before
     committing) that snapshot, simulating a worker crash at the worst moment.
@@ -213,18 +212,20 @@ def run_pipeline(
                     for n in names
                     if not n.startswith((".", "_"))
                 ]
+            if not src_paths:
+                # same outcome as select_input_files on a dataless dir,
+                # instead of Spark's UNABLE_TO_INFER_SCHEMA from the read
+                raise FileNotFoundError(f"no data files under {snap_dir}")
             df = spark.read.parquet(snap_dir)
-        if df is not None and min_input_partitions is not None:
-            target = min_input_partitions or spark.sparkContext.defaultParallelism
-            # getNumPartitions reads the plan, not the data — no job runs
-            if df.rdd.getNumPartitions() < target:
-                df = df.repartition(target)
+        target = spark.sparkContext.defaultParallelism
+        # getNumPartitions reads the plan, not the data — no job runs
+        if df is not None and df.rdd.getNumPartitions() < target:
+            df = df.repartition(target)
         process_snapshot(
             df, dim, rules,
             os.path.join(out_dir, "data", f"snapshot={snap}"),
             os.path.join(out_dir, "lineage", f"snapshot={snap}"),
             (run_id, int(snap)),
-            parser=parser,
             dim_keys=dim_keys,
             salt_partitions=salt_partitions,
             source_paths=src_paths,

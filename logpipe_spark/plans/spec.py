@@ -2,29 +2,36 @@
 (`src/config.c:11-18`, example `README.md:92-116`) re-imagined as a plan
 description compiled to DataFrame transforms.
 
-logpipe config:                       here:
-  { "inputs":  [ {plugin, opts} ],      { "source":  {path | snapshots},
-    "filters": [ {plugin, opts} ],        "parse":   {"parser": builtin|pandas},
-    "outputs": [ {plugin, opts} ] }       "enrich":  {dim keys, how},
-                                          "route":   [rule, ...],
-                                          "sinks":   {out_dir, salt} }
+A spec is ONE flat JSON object (``examples/case0_file_to_file.json``):
 
-Where the reference dlopens plugin .so files (`src/config.c:63-119`), this
-compiles to the same five-stage chain `pipeline.run_pipeline` executes —
-the "plugin ABI" is the DataFrame, and a custom stage is just a callable
-registered in STAGE_REGISTRY.
+  required  "source_dir", "out_dir", "rules": [rule, ...]
+  optional  "dim": [row, ...], "dim_keys", "salt_partitions", "run_id",
+            "files", "exclude_files", "max_partition_bytes" ("128MB"),
+            "poll_interval" ("100ms")
+
+Any other top-level key raises ValueError, so a misspelt option cannot
+silently run with its default. Where the reference dlopens plugin .so files
+(`src/config.c:63-119`), this compiles to the five-stage chain
+``pipeline.run_pipeline`` executes (``run``) or ``streaming.stream.run_stream``
+(``run_streaming``) — the "plugin ABI" is the DataFrame.
 """
 
 from __future__ import annotations
 
 import json
 from dataclasses import dataclass, field
-from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from logpipe_spark.functions.units import parse_duration_us, parse_size_bytes
 from logpipe_spark.pipeline import run_pipeline
+
+
+# every top-level key from_json reads
+SPEC_KEYS = frozenset({
+    "source_dir", "out_dir", "rules", "dim", "dim_keys", "salt_partitions",
+    "run_id", "files", "exclude_files", "max_partition_bytes", "poll_interval",
+})
 
 
 @dataclass
@@ -34,7 +41,6 @@ class PipelineSpec:
     rules: list[dict]
     dim_rows: list[dict] = field(default_factory=list)
     dim_keys: list[str] = field(default_factory=lambda: ["tool", "role"])
-    parser: str = "builtin"
     salt_partitions: int | None = None
     run_id: str | None = None
     # source-level basename glob filters (logpipe-input-file.c:593-739):
@@ -48,6 +54,9 @@ class PipelineSpec:
     @classmethod
     def from_json(cls, text: str) -> "PipelineSpec":
         cfg = json.loads(text)
+        unknown = sorted(set(cfg) - SPEC_KEYS)
+        if unknown:
+            raise ValueError(f"pipeline spec has unknown keys: {unknown}")
         for k in ("source_dir", "out_dir", "rules"):
             if k not in cfg:
                 raise ValueError(f"pipeline spec missing required key: {k!r}")
@@ -64,7 +73,6 @@ class PipelineSpec:
             rules=cfg["rules"],
             dim_rows=cfg.get("dim", []),
             dim_keys=cfg.get("dim_keys", ["tool", "role"]),
-            parser=cfg.get("parser", "builtin"),
             salt_partitions=cfg.get("salt_partitions"),
             run_id=cfg.get("run_id"),
             files=cfg.get("files", []),
@@ -105,7 +113,6 @@ class PipelineSpec:
                 dim,
                 self.rules,
                 run_id=self.run_id,
-                parser=self.parser,
                 salt_partitions=self.salt_partitions,
                 dim_keys=self.dim_keys,
                 include_files=self.files or None,
@@ -135,19 +142,6 @@ class PipelineSpec:
             available_now=available_now,
             timeout_sec=timeout_sec,
             trigger_interval_us=self.poll_interval_us,
-            parser=self.parser,
             dim_keys=self.dim_keys,
         )
 
-
-# custom-stage registry: name → Callable[[DataFrame], DataFrame]
-# (the dlopen analogue for user-defined filter stages)
-STAGE_REGISTRY: dict[str, Callable[[DataFrame], DataFrame]] = {}
-
-
-def register_stage(name: str):
-    def deco(fn: Callable[[DataFrame], DataFrame]):
-        STAGE_REGISTRY[name] = fn
-        return fn
-
-    return deco

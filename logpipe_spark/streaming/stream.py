@@ -55,7 +55,6 @@ def run_stream(
     available_now: bool = True,
     timeout_sec: int = 300,
     trigger_interval_us: int | None = None,
-    parser: str = "builtin",
     dim_keys: list[str] | None = None,
 ) -> dict:
     """Micro-batch the source dir through the pipeline into partitioned
@@ -93,7 +92,6 @@ def run_stream(
             os.path.join(lineage_root, f"batch={batch_id}"),
             (int(batch_id),),
             ddl=STREAM_LINEAGE_DDL,
-            parser=parser,
             dim_keys=dim_keys,
         )
         seen["batches"] += 1

@@ -8,6 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from logpipe_spark.ledger import SnapshotLedger, write_snapshots
+from logpipe_spark.operators.sinks import SALT_BUCKETS
 from logpipe_spark.pipeline import (
     read_lineage,
     read_sinks,
@@ -116,6 +117,12 @@ def test_lineage_conservation(spark, pipe_out, golden, transcripts_pdf):
             for r in per_part.filter(F.col("snapshot_id") == snap).collect()
         )
         assert ids == list(range(len(ids)))
+    # the (sink, salt)-keyed write shuffle bounds each snapshot's output
+    # files at sinks × SALT_BUCKETS, whatever the task count
+    for r in per_part.groupBy("snapshot_id").agg(
+        F.count(F.lit(1)).alias("files"), F.countDistinct("sink").alias("sinks")
+    ).collect():
+        assert r["files"] <= r["sinks"] * SALT_BUCKETS, r
     # per-sink file sums agree with the actual routed data read back
     sink_sums = {
         r["sink"]: r["s"]
@@ -246,29 +253,53 @@ def test_source_file_rows_names_unreadable_path():
         source_file_rows([bad])
 
 
-def test_fan_out_write_max_records_per_file(spark, tmp_path):
-    """maxRecordsPerFile bounds rows per output file at write time (the
-    write-time half of file-size control; compact.py is the read-time
-    half for files that came out too small)."""
-    import glob
+@pytest.mark.parametrize("globs", [None, ["*"]])
+@pytest.mark.parametrize("sidecar", [None, "_SUCCESS"])
+def test_empty_snapshot_dir_raises_before_any_write(
+    spark, transcripts_pdf, dim_df, rules, tmp_path, globs, sidecar
+):
+    """A snapshot dir with no data files has one outcome, with or without
+    include globs: FileNotFoundError naming the dir, and nothing written."""
+    import re
+    import shutil
 
-    from logpipe_spark.operators.sinks import fan_out_write
+    src = str(tmp_path / "src")
+    out = tmp_path / "out"
+    write_snapshots(transcripts_pdf, src, n_snapshots=2)
+    empty = os.path.join(src, "snapshot=0")
+    shutil.rmtree(empty)
+    os.makedirs(empty)
+    if sidecar:
+        open(os.path.join(empty, sidecar), "w").close()
+    with pytest.raises(FileNotFoundError, match=re.escape(empty)):
+        run_pipeline(spark, src, str(out), dim_df, rules, include_files=globs)
+    assert not out.exists()  # no data/, lineage/ or ledger
 
-    df = spark.range(0, 1000).select(
-        F.lit("sink_a").alias("sink"),
-        F.col("id").alias("turn_idx"),
-        F.md5(F.col("id").cast("string")).alias("text"),
-    )
-    capped = str(tmp_path / "capped")
-    fan_out_write(df, capped, shuffle_partitions=2, salt_buckets=1,
-                  max_records_per_file=100)
-    files = glob.glob(f"{capped}/sink=sink_a/*.parquet")
-    assert len(files) >= 10  # 1000 rows / 100-row cap
-    got = spark.read.parquet(capped)
-    assert got.count() == 1000
-    import pyarrow.parquet as pq
-    assert max(pq.ParquetFile(f).metadata.num_rows for f in files) <= 100
 
-    uncapped = str(tmp_path / "uncapped")
-    fan_out_write(df, uncapped, shuffle_partitions=2, salt_buckets=1)
-    assert len(glob.glob(f"{uncapped}/sink=sink_a/*.parquet")) < 10
+def test_readers_on_missing_out_dir_raise_and_create_nothing(spark, tmp_path):
+    from logpipe_spark.pipeline import read_lineage
+
+    typo = str(tmp_path / "typo_out")
+    for reader in (read_sinks, read_lineage):
+        with pytest.raises(ValueError, match="no committed snapshots"):
+            reader(spark, typo)
+        assert not os.path.exists(typo)
+
+
+def test_ledger_commit_fsyncs_directory_after_file(tmp_path, monkeypatch):
+    """The rename is only durable once the directory holding it is synced:
+    commit fsyncs the manifest file, then the out_dir."""
+    import stat
+
+    synced = []
+    real_fsync = os.fsync
+
+    def recording_fsync(fd):
+        synced.append(stat.S_ISDIR(os.fstat(fd).st_mode))
+        real_fsync(fd)
+
+    monkeypatch.setattr(os, "fsync", recording_fsync)
+    out = str(tmp_path / "out")
+    SnapshotLedger(out).commit(0, "r1")
+    assert synced == [False, True]
+    assert SnapshotLedger(out).committed() == {0}

@@ -38,6 +38,13 @@ def test_spec_validation_errors():
                 {"source_dir": "x", "out_dir": "y", "rules": [{"rule_id": 1}]}
             )
         )
+    # a misspelt option (and the removed "parser") names itself instead of
+    # running with its default
+    with pytest.raises(ValueError, match=r"unknown keys: \['exclude_file', 'parser'\]"):
+        PipelineSpec.from_json(json.dumps({
+            "source_dir": "x", "out_dir": "y", "rules": [],
+            "exclude_file": ["*.tmp"], "parser": "builtin",
+        }))
 
 
 def test_snapshot_source_range_scan(spark, transcripts_pdf, tmp_path):
